@@ -4,14 +4,22 @@ Parity target: /root/reference/src/iamsystem/tree/trie.py:21-99 and
 tree/nodes.py:16-246. Built once on the driver from the keyword table, then
 broadcast to executors (SURVEY.md D6) — the dictionary is the small side.
 
-Design difference vs the reference: nodes store an int id and live in flat
-lists (children dicts keyed by token string), which pickles compactly for
-``sparkContext.broadcast`` and keeps ancestor sets precomputed for the
-nested-annotation removal join (annotation.py:190-197).
+Design difference vs the reference: nodes store an int id (``node_num``,
+dense in insertion order) and keywords are referenced by index into
+``Trie.keywords``. A ``Trie`` pickles as flat lists, not as its linked node
+graph: the node tokens in ``node_num`` order, each node's parent index, each
+keyword's node index, ``keywords`` itself, and only those per-node keyword
+lists that do not mirror ``kw_indices`` (keywords attached via
+``Node.add_keyword``). That state is a few lists of strings and ints, which
+``cloudpickle`` writes without walking one object per node, and which
+unpickles into the node graph in one loop with the cyclic GC paused — the
+broadcast of a compiled dictionary (SURVEY.md D6) pays neither a recursive
+object walk on the driver nor repeated GC passes on every worker.
 """
 
 from __future__ import annotations
 
+import gc
 import warnings
 from typing import Dict, FrozenSet, Iterable, List, Optional, Sequence, Tuple
 
@@ -218,6 +226,98 @@ class Trie:
             self.add_keyword(
                 label, kb_id, tokenizer, stopwords.is_token_a_stopword, obj=obj
             )
+
+    # --- pickling: flat state, see the module docstring ----------------------
+    def _nodes_by_num(self) -> Optional[List[Node]]:
+        """Every node at index ``node_num``, or None unless the trie has the
+        shape ``_new_node`` gives it: node numbers dense from 0, every parent
+        numbered below its children, children dicts in ascending
+        ``node_num`` order. Only then does a rebuild in ``node_num`` order
+        reproduce the graph exactly. Hand-linked nodes
+        (``Node(token, num, parent)`` on a trie's nodes) may fail the check;
+        such a trie pickles as its linked graph."""
+        n = self._node_count
+        nodes: List[Optional[Node]] = [None] * n
+        nodes[0] = self.root
+        # children are numbered above their parent, so each slot is filled
+        # before the loop reaches it; an empty slot is an unreachable number
+        for node in nodes:
+            if node is None:
+                return None
+            last = node.node_num
+            for child in node.children.values():
+                num = child.node_num
+                if not last < num < n or nodes[num] is not None:
+                    return None
+                nodes[num] = child
+                last = num
+        return nodes
+
+    def __getstate__(self):
+        state = dict(self.__dict__)
+        nodes = self._nodes_by_num()
+        if nodes is None:
+            return state  # linked graph, pickled object by object
+        keywords = self.keywords
+        # add_keyword_with_tokens gives each keyword a fresh index on one
+        # node, so every kw_indices list is ascending and they are disjoint:
+        # one node index per keyword rebuilds them exactly
+        kw_nodes = [-1] * len(keywords)
+        own_keywords = {}
+        for node in nodes:
+            idxs = node.kw_indices
+            kws = node._keywords
+            if not (idxs or kws):
+                continue
+            num = node.node_num
+            for i in idxs:
+                kw_nodes[i] = num
+            if len(kws) != len(idxs) or any(
+                kw is not keywords[i] for kw, i in zip(kws, idxs)
+            ):
+                own_keywords[num] = kws
+        del state["root"], state["_node_count"]
+        state["tokens"] = [node.token for node in nodes]
+        state["parents"] = [node.parent.node_num for node in nodes[1:]]
+        state["kw_nodes"] = kw_nodes
+        state["own_keywords"] = own_keywords
+        return state
+
+    def __setstate__(self, state) -> None:
+        if "root" in state:
+            self.__dict__.update(state)
+            return
+        state = dict(state)
+        tokens = state.pop("tokens")
+        parents = state.pop("parents")
+        kw_nodes = state.pop("kw_nodes")
+        own_keywords = state.pop("own_keywords")
+        self.__dict__.update(state)
+        keywords = self.keywords
+        # ~4 GC-tracked containers per node: with the collector on, building
+        # a large trie triggers collection after collection over the objects
+        # already built. Pause it for this loop only; never gc.freeze() — a
+        # trie is cyclic, and a frozen one could not be freed once dropped.
+        gc_was_enabled = gc.isenabled()
+        gc.disable()
+        try:
+            root = Node(tokens[0], 0)
+            nodes = [root]
+            append = nodes.append
+            for num, (tok, parent) in enumerate(zip(tokens[1:], parents), 1):
+                append(Node(tok, num, nodes[parent]))
+            for i, num in enumerate(kw_nodes):
+                if num >= 0:
+                    node = nodes[num]
+                    node.kw_indices.append(i)
+                    node._keywords.append(keywords[i])
+            for num, kws in own_keywords.items():
+                nodes[num]._keywords = kws
+        finally:
+            if gc_was_enabled:
+                gc.enable()
+        self.root = root
+        self._node_count = len(nodes)
 
     def get_unigrams(self) -> FrozenSet[str]:
         """Distinct first-level-and-below tokens of all keywords

@@ -2,9 +2,13 @@
 
 ``annotate(df, matcher, text_col)`` ≡ one ``matcher.annot_text`` per row
 (/root/reference/src/iamsystem/matcher/matcher.py:291-301), executed as a
-single ``mapInPandas`` pass: the compiled Matcher (trie + fuzzy config +
-stopwords) is captured in the UDF closure, which Spark broadcasts with the
-task; all per-token work happens inside the Arrow batch.
+single ``mapInPandas`` pass. By default (``use_broadcast=True``) the
+compiled Matcher (trie + fuzzy config + stopwords) is cloudpickled once on
+the driver and shipped as a Spark broadcast; each Python worker unpickles a
+given payload once and keeps it in a small memo keyed by the payload's
+digest. ``use_broadcast=False`` captures the matcher in the UDF closure
+instead, so it rides inside every serialized task. All per-token work
+happens inside the Arrow batch.
 
 Output: one row per annotation (exploded), carrying provenance columns —
 the DataFrame re-expression of ``Annotation`` objects
@@ -23,6 +27,7 @@ operator is a narrow map.
 from __future__ import annotations
 
 import collections
+import hashlib
 
 from typing import Iterator, List, Optional, Sequence
 
@@ -33,14 +38,15 @@ from pyspark.sql import types as T
 
 from iamsystem_python_spark.core.matcher import Matcher
 
-# Worker-side memo: broadcast payload (bytes) → deserialized matcher.
-# PySpark's per-worker _broadcastRegistry caches the *bytes* of a broadcast
-# across tasks; this memo caches the cloudpickle.loads on top, so a
-# 300K-keyword dictionary unpickles once per Python worker process, not
-# once per task.  Keyed by payload object identity (pinned by the strong
-# reference held in the memo); bounded LRU so a long-running service
-# cycling many matchers doesn't accrete.
-_WORKER_MATCHER_MEMO: "collections.OrderedDict[int, tuple]" = (
+# Worker-side memo: digest of a broadcast payload (bytes) → deserialized
+# matcher. PySpark's per-worker _broadcastRegistry caches the *bytes* of a
+# broadcast across tasks; this memo caches the cloudpickle.loads on top.
+# Every annotate call makes a new broadcast, but pickling an unchanged
+# matcher gives the same bytes, so keying by content lets a Python worker
+# reuse its resident matcher across calls (and tasks), while a changed
+# dictionary misses. Bounded LRU so a long-running service cycling many
+# matchers doesn't accrete.
+_WORKER_MATCHER_MEMO: "collections.OrderedDict[bytes, Matcher]" = (
     collections.OrderedDict()
 )
 _WORKER_MATCHER_MEMO_CAP = 8
@@ -63,13 +69,13 @@ def _resolve_matcher(bc) -> Matcher:
     from pyspark import cloudpickle
 
     blob = bc.value  # bytes, cached per worker by pyspark's registry
-    key = id(blob)
-    entry = _WORKER_MATCHER_MEMO.get(key)
-    if entry is not None and entry[0] is blob:
+    key = hashlib.blake2b(blob, digest_size=16).digest()
+    m = _WORKER_MATCHER_MEMO.get(key)
+    if m is not None:
         _WORKER_MATCHER_MEMO.move_to_end(key)
-        return entry[1]
+        return m
     m = cloudpickle.loads(blob)
-    _WORKER_MATCHER_MEMO[key] = (blob, m)
+    _WORKER_MATCHER_MEMO[key] = m
     if len(_WORKER_MATCHER_MEMO) > _WORKER_MATCHER_MEMO_CAP:
         _WORKER_MATCHER_MEMO.popitem(last=False)
     return m
@@ -136,7 +142,7 @@ def annotate(
     ``use_broadcast=True`` ships the compiled matcher as a Spark broadcast
     variable instead of a closure capture: the dictionary then travels
     torrent-style once per executor and unpickles once per Python worker
-    (cached in the worker's broadcast registry), instead of riding inside
+    and payload (see ``_WORKER_MATCHER_MEMO``), instead of riding inside
     every serialized task.  For a 300K-keyword matcher on a 1000-executor
     cluster that is the difference between per-task and per-worker
     deserialization cost."""

@@ -1063,8 +1063,11 @@ def boilerplate_removal(
     the row-local base frame into the output — a passthrough, NOT a join
     back onto the corpus (the signing-view consumer needs repo/path/sha
     next to the cleaned text without a second text-bearing shuffle).
+    ``id_col`` and ``text_col`` in ``carry_cols`` are ignored: the id is
+    always the first output column, and the text comes out as
+    ``cleaned_text``.
     """
-    carry = [c for c in carry_cols if c != id_col]
+    carry = [c for c in carry_cols if c not in (id_col, text_col)]
     if segmenter == "lines":
         sep = "\n"
         base = (

@@ -251,12 +251,13 @@ def compare_chunk_dedup(spark, clean_out: str, resumed_out: str) -> dict:
         for r in read_sink(spark, resumed_out).collect()
     }
     # pure-Python replay of the portable spec: global first occurrence of
-    # each 60-bit chunk hash in (doc_id, chunk_i) order
+    # each 60-bit chunk hash in (doc_id, chunk_i) order, over the operator's
+    # ceil(n_tokens / CHUNK_TOKENS) windows per document
     seen, want = set(), {}
     for rows in gen_rows():
         for doc_id, _lang, content in rows:
             toks = content.split(" ")
-            for ci in range(0, max(1, len(toks)) // CHUNK_TOKENS):
+            for ci in range(-(-len(toks) // CHUNK_TOKENS)):
                 chunk = " ".join(toks[ci * CHUNK_TOKENS : (ci + 1) * CHUNK_TOKENS])
                 h = int(hashlib.sha256(chunk.encode()).hexdigest()[:15], 16)
                 want[(doc_id, ci)] = h not in seen

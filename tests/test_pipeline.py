@@ -527,6 +527,27 @@ def test_boilerplate_carry_cols_lines_only(spark):
         )
 
 
+@pytest.mark.parametrize("rebuild", ["join", "broadcast"])
+def test_boilerplate_carry_cols_ignores_text_col(spark, rebuild):
+    """Naming the text column in carry_cols is ignored like the id column:
+    both rebuild strategies return one (id, meta, ..., cleaned_text) row."""
+    from iamsystem_python_spark.operators.dedup_text import boilerplate_removal
+
+    df = spark.createDataFrame(
+        [("d1", "x\ny", "m1"), ("d2", "x\nz", "m2")],
+        ["doc_id", "text", "meta"],
+    )
+    out = boilerplate_removal(
+        df, min_docs=2, segmenter="lines", rebuild=rebuild,
+        carry_cols=("doc_id", "text", "meta"),
+    )
+    assert out.columns == [
+        "doc_id", "meta", "n_segments", "n_removed", "cleaned_text"
+    ]
+    got = {r.doc_id: (r.meta, r.cleaned_text) for r in out.collect()}
+    assert got == {"d1": ("m1", "y"), "d2": ("m2", "z")}
+
+
 def _partition_sets(df):
     """Cluster assignment → set of frozenset components (+ label map)."""
     from collections import defaultdict
